@@ -1,33 +1,17 @@
 """Cardinality / distribution profiling (SURVEY.md §2.9 X6).
 
-At 100 TB exact COUNT(DISTINCT) is a full shuffle of the key space; the
-approximate sketches (HyperLogLog++ via ``approx_count_distinct``,
-KLL/GK via ``percentile_approx``) are one-pass, mergeable, and
-bounded-memory — the right default. Sketch outputs aren't
-oracle-comparable (driver records a rows-only check).
+At 100 TB exact COUNT(DISTINCT) is a full shuffle of the key space;
+mergeable, bounded-memory sketches are the right default. HLL++ and
+KLL come built in (``approx_count_distinct``/``percentile_approx``,
+certified in plans/extensions.x12_approx_profile); this module holds
+the two Spark does not ship: count-min (frequencies) and KMV (distinct
+counts with set algebra), both md5-bucketed so DuckDB can replay them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_profile(df: DataFrame, key_cols: list[str],
-                   measure_cols: list[str], rsd: float = 0.02) -> DataFrame:
-    """One-pass approximate profile: HLL distinct per key column,
-    approximate quantiles + min/max/mean per measure column."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in key_cols:
-        aggs.append(F.approx_count_distinct(c, rsd).alias(f"approx_distinct_{c}"))
-    for c in measure_cols:
-        aggs += [
-            F.min(c).alias(f"min_{c}"),
-            F.max(c).alias(f"max_{c}"),
-            F.round(F.avg(c), 4).alias(f"avg_{c}"),
-            F.percentile_approx(c, [0.25, 0.5, 0.75, 0.95], 10000).alias(f"quantiles_{c}"),
-        ]
-    return df.agg(*aggs)
 
 
 # --------------------------------------------------------------------------

@@ -78,19 +78,25 @@ def dedup_against_ledger(incoming: DataFrame, ledger: DataFrame | None) -> DataF
     return hashed.dropDuplicates(["row_hash"])
 
 
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
-    """Read the hash ledger; only a genuinely absent path means 'first
-    run' (→ None). Any other failure — corrupt parquet, permissions —
-    must surface: swallowing it would silently re-ingest the entire
-    source as if the ledger were empty."""
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when nothing was ever written
+    there. Only a genuinely absent path means None; any other failure —
+    corrupt parquet, permissions — surfaces."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(ledger_path)
+        return spark.read.parquet(path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+
+
+def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
+    """Read the hash ledger; only a genuinely absent path means 'first
+    run' (→ None). Any other failure must surface: swallowing it would
+    silently re-ingest the entire source as if the ledger were empty."""
+    return read_parquet_or_none(spark, ledger_path)
 
 
 def ingest_increment(
@@ -234,10 +240,17 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 
 @dataclass
 class StarSchema:
+    silver: DataFrame
     dim_airlines: DataFrame
     dim_airports: DataFrame
     dim_date: DataFrame
-    fact_flights: DataFrame
+
+    @property
+    def fact_flights(self) -> DataFrame:
+        """The fact over ``silver``, resolved against this schema's dims.
+        Built on access: a caller that resolves the fact against dims it
+        has already written calls :func:`build_fact` with those instead."""
+        return build_fact(self.silver, self.dim_airlines, self.dim_airports)
 
 
 def build_fact(silver: DataFrame,
@@ -283,8 +296,5 @@ def build_fact(silver: DataFrame,
 
 
 def build_star_schema(silver: DataFrame) -> StarSchema:
-    dim_airlines = build_dim_airlines(silver)
-    dim_airports = build_dim_airports(silver)
-    dim_date = build_dim_date(silver)
-    fact = build_fact(silver, dim_airlines, dim_airports)
-    return StarSchema(dim_airlines, dim_airports, dim_date, fact)
+    return StarSchema(silver, build_dim_airlines(silver),
+                      build_dim_airports(silver), build_dim_date(silver))

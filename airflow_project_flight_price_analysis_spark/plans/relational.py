@@ -379,8 +379,8 @@ def q21_rollup_fare(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cardinality/range profile in one pass. (The approximate
     variant — approx_count_distinct / percentile_approx, the right choice
-    at 100 TB — is in operators/profiling.py as a rows-only check since
-    sketch outputs aren't oracle-comparable.)"""
+    at 100 TB — is x12_approx_profile in plans/extensions.py, which
+    certifies the sketches against exact answers in the same pass.)"""
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("n_rows"),

@@ -4,6 +4,8 @@ ingest→transform→validate flow (dags/flight_pipeline_dag.py:49-68)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from airflow_project_flight_price_analysis_spark.operators import star
@@ -156,6 +158,108 @@ def test_dropped_row_accounting_single_pass(spark, csv_file, tmp_path):
     # silver rows = deduped - dropped_invalid; fact may drop more (null FKs)
     silver_rows = report["deduped_rows"] - report["rows_dropped_invalid"]
     assert report["fact_rows"] <= silver_rows <= report["deduped_rows"]
+
+
+EXTRA_ROWS = [  # a second day's file: one new row, one new bad fare
+    "biman bangladesh airlines,DAC,hazrat shahjalal intl,SPD,saidpur airport,"
+    "2025-04-01 07:00:00,2025-04-01 08:10:00,1.17,Direct,Dash 8,economy,"
+    "online,3800,570,4370,Hajj,30",
+    "air astra,CGP,shah amanat intl,DAC,hazrat shahjalal intl,"
+    "2025-04-02 07:00:00,2025-04-02 08:00:00,1.0,Direct,ATR 72,economy,"
+    "online,0,0,0,Regular,5",
+]
+
+
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_report_counts_match_independent_reads(spark, csv_file, tmp_path):
+    """Every count the report takes from an observation agrees with a
+    plain re-read of what the run read or wrote, on a backfill and on a
+    second, incremental file; the cached silver is released."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        DIMS,
+        run_pipeline,
+    )
+
+    wh = str(tmp_path / "wh")
+    bronze_path = f"{wh}/bronze_flights"
+    day2 = tmp_path / "day2.csv"
+    day2.write_text(Path(csv_file).read_text() + "\n".join(EXTRA_ROWS) + "\n")
+    persisted = _persisted_rdds(spark)
+    for path, n_new in ((csv_file, 4), (str(day2), 2)):
+        report = run_pipeline(spark, path, wh)
+        assert report["ingested_new_rows"] == n_new
+        assert report["source_rows"] == spark.read.csv(path, header=True).count()
+        bronze_rows = spark.read.parquet(bronze_path).count()
+        assert report["deduped_rows"] == report["staged_rows"] == bronze_rows
+        for name in DIMS:
+            assert report["dims"][name] == spark.read.parquet(f"{wh}/{name}").count()
+        silver_rows = star.clean_flights(spark.read.parquet(bronze_path)).count()
+        assert report["rows_dropped_invalid"] == bronze_rows - silver_rows
+        assert report["fact_rows"] == spark.read.parquet(f"{wh}/fact_flights").count()
+        assert _persisted_rdds(spark) == persisted
+    assert report["source_rows"] == 7 and report["deduped_rows"] == 6
+    assert report["rows_dropped_invalid"] == 2 and report["fact_rows"] == 3
+
+
+def test_header_only_first_day_is_a_passing_noop(spark, tmp_path):
+    """A first run on a file with no data rows appends nothing, so there
+    is no bronze yet: the run is the no-op ``reconcile`` allows (empty
+    source, empty fact), not a PATH_NOT_FOUND on the bronze read."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    p = tmp_path / "empty.csv"
+    p.write_text(CSV_HEADER + "\n")
+    report = run_pipeline(spark, str(p), str(tmp_path / "wh"))
+    assert report["passed"]
+    assert report["ingested_new_rows"] == report["rows_dropped_invalid"] == 0
+    assert set(report["dims"].values()) == {0}
+    for k in ("source_rows", "deduped_rows", "staged_rows", "fact_rows"):
+        assert report[k] == 0, k
+    # a fact left behind with no bronze under it is phantom rows, not a no-op
+    spark.range(3).write.parquet(str(tmp_path / "wh" / "fact_flights"))
+    report = run_pipeline(spark, str(p), str(tmp_path / "wh"))
+    assert report["fact_rows"] == 3 and not report["passed"]
+
+
+def test_stage_timing_labels_and_job_budget(spark, csv_file, tmp_path):
+    """The report times and counts the Spark jobs of each stage, the jobs
+    carry their stage's group, and the caller's own job labels survive.
+    The budget pins the one-clean-pass shape: 23 jobs on this fixture
+    (ingest 6, transform 11, validate 6); an edit that recomputes silver
+    or re-scans a source again adds jobs and fails here."""
+    import time
+
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        report = run_pipeline(spark, csv_file, str(tmp_path / "wh"))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    stages = ["ingest", "transform", "validate"]
+    assert list(report["stage_sec"]) == list(report["stage_jobs"]) == stages
+    assert all(t >= 0 for t in report["stage_sec"].values())
+    assert all(n > 0 for n in report["stage_jobs"].values())
+    assert sum(report["stage_jobs"].values()) <= 23, report["stage_jobs"]
+    # the status store is fed asynchronously; give it a moment
+    tracker = sc.statusTracker()
+    labelled = lambda: [s for s in stages if tracker.getJobIdsForGroup(f"flight_pipeline.{s}")]
+    deadline = time.monotonic() + 5
+    while labelled() != stages and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert labelled() == stages
 
 
 def test_jdbc_wrappers_contract(spark):
